@@ -77,7 +77,7 @@ def main_er_dissect() -> None:
         lambda: B.tfidf_canopy_keys_from_vocab(vocab, n_docs, "conv_text", top_m=4),
         t,
     )
-    _timed(spark, "minhash_band_keys", lambda: B.minhash_band_keys_from_tokens(toks), t)
+    _timed(spark, "minhash_band_keys_from_tokens", lambda: B.minhash_band_keys_from_tokens(toks), t)
     t0 = time.time()
     bm = dd.blocking_map(records)
     bm = bm.localCheckpoint(eager=True)

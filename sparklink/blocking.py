@@ -13,10 +13,11 @@ dedup/candidate join. Keys are namespaced ``"<pid>:<key>"`` so different
 predicates never collide (same convention as dedupe's fingerprinter).
 
 Scale controls (BASELINE.json north_rule: "skew handled explicitly"):
-- ``cap_block_sizes``: drop or salt oversized blocks before the self-join
+- ``cap_block_sizes``: drop oversized blocks before the self-join
   squares them (dedupe drops oversized blocks internally [lib]).
-- TF-IDF canopy index predicates are a two-pass DataFrame job (IDF agg ->
-  broadcast-join -> per-record top-m tokens), SURVEY.md §2.3.
+- TF-IDF canopy index predicates rank each record's collected token
+  vocab (``record_token_vocab``) by tf*idf and keep the top-m tokens,
+  SURVEY.md §2.3.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sparklink.preprocess import tokens
@@ -212,8 +213,13 @@ def token_stats(records: DataFrame, column: str, id_col: str = "conv_id") -> tup
         .groupBy("record_id", "token")
         .agg(F.count("*").alias("tf"))
     )
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    return toks, tf, dfreq
+    return toks, tf, doc_freq(tf)
+
+
+def doc_freq(tf: DataFrame) -> DataFrame:
+    """tf(record_id, token, tf) -> dfreq(token, df): the number of records
+    each token occurs in."""
+    return tf.groupBy("token").agg(F.count("*").alias("df"))
 
 
 def partitioned_token_stats(
@@ -247,16 +253,21 @@ def partitioned_token_stats(
 
 def record_token_vocab(tf: DataFrame, dfreq: DataFrame) -> DataFrame:
     """(record_id, vocab array<struct<token,tf,df>>): each record's token
-    stats collected into ONE row — the shared base for canopy keys and the
-    scorer's tf-idf arrays.
+    stats collected into ONE row — the one token-weighting base for canopy
+    keys (tfidf_canopy_keys_from_vocab) and the scorer's tf-idf arrays
+    (distances.tfidf_token_arrays_from_vocab), in the batch pipeline and
+    the gazetteer alike.
 
-    Why: both consumers rank a record's tokens by tf*idf, which the r1-r5
-    shape did with a window (partitionBy record_id + sort) EACH — two
-    full shuffles + sorts of the (record, token) frame. Collecting once
-    per record (one exchange, hash aggregate, no sort) and ranking
-    array-side replaces both (guide §2.4: operations keyed the same way
-    share one exchange). Selection and weights are bit-identical: the
-    array comparators replicate the windows' (w desc, token asc) order.
+    Both consumers rank a record's tokens by tf*idf; collecting once per
+    record (one exchange, hash aggregate, no sort) lets each rank
+    array-side instead of paying a window shuffle + sort of the
+    (record, token) frame (guide §2.4: operations keyed the same way
+    share one exchange).
+
+    ``dfreq`` may come from another corpus than ``tf`` (the gazetteer
+    weights a messy delta by the staged index-time df): the inner join
+    drops a token absent from ``dfreq``, so it carries no weight, and a
+    record none of whose tokens is in ``dfreq`` gets no row.
     """
     return (
         tf.join(F.broadcast(dfreq), "token")
@@ -273,10 +284,14 @@ def tfidf_canopy_keys_from_vocab(
     min_df: int = 1,
     max_df_frac: float = 0.2,
 ) -> DataFrame:
-    """Canopy keys from the collected per-record vocab (no window, no new
-    shuffle): filter df bounds, weight by tf*idf, sort (w desc, token asc),
-    keep top_m — the exact selection tfidf_canopy_keys_from_stats makes
-    with its window."""
+    """Per-record canopy keys = its top-m TF-IDF tokens, ranked inside the
+    collected per-record vocab (no window, no new shuffle): filter df
+    bounds, weight by tf*idf, sort (w desc, token asc), keep top_m.
+    Tokens above ``max_df_frac`` document frequency are stop-worded out
+    (they would create huge, useless blocks — the skew source). Mirrors
+    dedupe's TfidfTextCanopyPredicate index build
+    (mysql_example/mysql_example.py:202-211 [lib]).
+    Returns (record_id, block_key)."""
     max_df = int(max(1, max_df_frac * n_docs))
     eligible = F.filter("vocab", lambda s: (s["df"] >= min_df) & (s["df"] <= max_df))
     wt = F.transform(
@@ -299,36 +314,15 @@ def tfidf_canopy_keys_from_vocab(
     return vocab.select("record_id", F.explode(keys).alias("block_key"))
 
 
-def tfidf_canopy_keys_from_stats(
-    tf: DataFrame,
-    dfreq: DataFrame,
-    n_docs: int,
-    column_label: str,
-    top_m: int = 3,
-    min_df: int = 1,
-    max_df_frac: float = 0.2,
-) -> DataFrame:
-    """Canopy keys from a shared token-stats frame (no new explode)."""
-    d = dfreq.filter((F.col("df") >= min_df) & (F.col("df") <= int(max(1, max_df_frac * n_docs))))
-    scored = tf.join(F.broadcast(d), "token").withColumn(
-        "w", F.col("tf") * F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0))
-    )
-    w = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_m)
-        .select(
-            F.concat(F.lit(f"canopy({column_label})"), F.lit(":"), F.col("token")).alias("block_key"), "record_id"
-        )
-    )
-
-
 def minhash_band_keys_from_tokens(
     toks: DataFrame, k: int = 32, bands: int = 8, shingle_n: int = 3
 ) -> DataFrame:
     """MinHash band keys over word n-gram shingles, derived from the shared
-    materialized token-array frame (blocking.token_stats) — identical
-    semantics to minhash_band_keys but with no re-tokenization pass.
+    materialized token-array frame (blocking.partitioned_token_stats) — no
+    re-tokenization pass. Records agreeing on any band of their minhash
+    signature share a key: with k=32, bands=8 (r=4), a pair at
+    word-shingle Jaccard 0.7 bands together with p≈0.89 while random
+    pairs rarely collide (dedupe's LSH index-predicate idea [lib]).
 
     Word-shingle (not token-set) minhash is deliberate: token-set bands at
     equal (k, bands) collide far more readily — measured 5.8x the candidate
@@ -363,86 +357,6 @@ def minhash_band_keys_from_tokens(
 
 
 # --------------------------------------------------------------------------
-# TF-IDF canopy index predicate (two-pass job; SURVEY §2.3 index predicates)
-# --------------------------------------------------------------------------
-
-
-def tfidf_canopy_keys(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    top_m: int = 3,
-    min_df: int = 1,
-    max_df_frac: float = 0.2,
-) -> DataFrame:
-    """Per-record canopy keys = its top-m TF-IDF tokens.
-
-    Pass 1: token document frequencies (one agg). Pass 2: rank tokens per
-    record by tf*idf, keep top-m. Tokens above ``max_df_frac`` document
-    frequency are stop-worded out (they would create huge, useless blocks —
-    the skew source). Mirrors dedupe's TfidfTextCanopyPredicate index build
-    (mysql_example/mysql_example.py:202-211 [lib]).
-    Returns (block_key, record_id).
-    """
-    n_docs = records.count()
-    records = widen_to_parallelism(records)
-    tok = records.select(F.col(id_col).alias("record_id"), F.explode(F.array_distinct(tokens(F.col(column)))).alias("token"))
-    df_counts = tok.groupBy("token").agg(F.count("*").alias("df"))
-    df_counts = df_counts.filter((F.col("df") >= min_df) & (F.col("df") <= int(max(1, max_df_frac * n_docs))))
-    tf = records.select(F.col(id_col).alias("record_id"), F.explode(tokens(F.col(column))).alias("token")).groupBy(
-        "record_id", "token"
-    ).agg(F.count("*").alias("tf"))
-    scored = tf.join(F.broadcast(df_counts), "token").withColumn(
-        "w", F.col("tf") * F.log(F.lit(float(n_docs + 1)) / (F.col("df") + 1.0))
-    )
-    w = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= top_m)
-        .select(F.concat(F.lit(f"canopy({column})") , F.lit(":"), F.col("token")).alias("block_key"), "record_id")
-    )
-
-
-def minhash_band_keys(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    k: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    shingle: str = "word",
-) -> DataFrame:
-    """MinHash-band blocking keys: records agreeing on any band of their
-    minhash signature share a key. The recall backstop for noisy text where
-    token/prefix predicates miss (scattered word drops/typos): with k=32,
-    bands=8 (r=4), a pair at word-shingle Jaccard 0.7 bands together with
-    p≈0.89 while random pairs rarely collide. This is dedupe's LSH
-    index-predicate idea [lib] executed as the same explode/groupBy plan as
-    dedup.minhash_lsh_pairs. Returns (block_key, record_id).
-    """
-    from sparklink.dedup import minhash_signatures
-
-    sigs = minhash_signatures(
-        records.select(F.col(id_col), F.col(column)),
-        text_col=column,
-        id_col=id_col,
-        k=k,
-        shingle_n=shingle_n,
-        shingle=shingle,
-    )
-    r = k // bands
-    band_keys = F.array(
-        *[
-            F.concat(F.lit(f"mh{b}:"), F.xxhash64(F.slice("sig", b * r + 1, r).cast("array<string>")).cast("string"))
-            for b in range(bands)
-        ]
-    )
-    return sigs.select(F.col(id_col).alias("record_id"), F.explode(band_keys).alias("block_key")).dropDuplicates(
-        ["block_key", "record_id"]
-    )
-
-
-# --------------------------------------------------------------------------
 # Skew control
 # --------------------------------------------------------------------------
 
@@ -464,24 +378,3 @@ def cap_block_sizes(blocking_map: DataFrame, max_block_size: int = 200) -> DataF
         blocking_map.groupBy("block_key").agg(F.count("*").alias("n")).filter(F.col("n") > max_block_size).select("block_key")
     )
     return blocking_map.join(F.broadcast(oversized), "block_key", "left_anti")
-
-
-def salt_block_sizes(blocking_map: DataFrame, salt_threshold: int = 64, n_salts: int = 8) -> DataFrame:
-    """Alternative to dropping: split a hot block into n_salts sub-blocks.
-
-    Within-sub-block pairs are preserved; cross-sub-block pairs are traded
-    for bounded skew (recall loss is measured, not silent — see
-    metrics.py). Use for keys between salt_threshold and the hard cap.
-    Same plan contract as cap_block_sizes: the input is read twice
-    (sizes aggregate + salt join) — persist or stage an expensive map
-    before calling.
-    """
-    sizes = blocking_map.groupBy("block_key").agg(F.count("*").alias("n"))
-    bm = blocking_map.join(F.broadcast(sizes.filter(F.col("n") > salt_threshold)), "block_key", "left")
-    return bm.withColumn(
-        "block_key",
-        F.when(
-            F.col("n").isNotNull(),
-            F.concat(F.col("block_key"), F.lit("#"), (F.abs(F.hash("record_id")) % n_salts).cast("string")),
-        ).otherwise(F.col("block_key")),
-    ).drop("n")

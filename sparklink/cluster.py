@@ -29,7 +29,9 @@ from pyspark.sql import functions as F
 def connected_components(edges: DataFrame, max_iter: int = 25, checkpoint_dir: str | None = None) -> DataFrame:
     """edges(id_a, id_b) -> (record_id, component) with component = min id
     reachable. Iterative DataFrame joins; every round truncates lineage
-    (SURVEY §7 hard part (b)). With ``checkpoint_dir`` set, rounds use
+    (SURVEY §7 hard part (b)). Raises RuntimeError when labels still
+    change in round ``max_iter`` — unconverged labels would silently
+    split components. With ``checkpoint_dir`` set, rounds use
     reliable ``df.checkpoint()`` (replicated storage — survives executor
     loss on a real cluster); default is ``localCheckpoint`` (fastest, but
     an executor loss mid-iteration kills the job)."""
@@ -91,6 +93,8 @@ def connected_components(edges: DataFrame, max_iter: int = 25, checkpoint_dir: s
         labels = new_labels.select("id", "label")
         if changed == 0:
             break
+    else:
+        raise RuntimeError(f"connected_components did not converge within max_iter={max_iter} rounds")
     return labels.select(F.col("id").alias("record_id"), F.col("label").alias("component"))
 
 

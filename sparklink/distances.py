@@ -22,8 +22,6 @@ is on cluster decisions, with the LR weights fit to labeled pairs
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
@@ -36,7 +34,7 @@ from pyspark.sql import Column, DataFrame, functions as F
 # Blocking to ~1k rows keeps the working set (~1-2 MB) cache-resident,
 # and sorting rows by length first lets each block's DP loop stop at
 # the block's own max string length instead of the batch max.
-_DP_CHUNK = int(os.environ.get("SPARKLINK_DP_CHUNK", "1024"))
+_DP_CHUNK = 1024
 
 # --------------------------------------------------------------------------
 # batch string encoding
@@ -385,68 +383,33 @@ def rel_num_diff(l: Column, r: Column) -> Column:
 
 
 # --------------------------------------------------------------------------
-# TF-IDF cosine as a DataFrame sub-plan (Text comparator; SURVEY §2.6)
+# TF-IDF cosine (Text comparator; SURVEY §2.6)
 # --------------------------------------------------------------------------
 
 
-def tfidf_vectors(records: DataFrame, column: str, id_col: str = "conv_id") -> DataFrame:
-    """(record_id, token, w) with L2-normalized tf-idf weights.
-
-    IDF from one aggregation over the corpus (the ``corpus=`` generator the
-    reference feeds to Text/Set variables,
-    record_linkage_example/record_linkage_example.py:111-114); weights
-    normalized per record so pair cosine = sum of weight products.
-    """
-    from sparklink.preprocess import tokens
-
-    n_docs = records.count()
-    tok = records.select(F.col(id_col).alias("record_id"), F.explode(tokens(F.col(column))).alias("token"))
-    tf = tok.groupBy("record_id", "token").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    w = tf.join(F.broadcast(dfreq), "token").withColumn(
-        "w", F.col("tf") * F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0))
-    )
-    norm = w.groupBy("record_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm"))
-    return w.join(norm, "record_id").select("record_id", "token", (F.col("w") / F.col("norm")).alias("w"))
-
-
-def tfidf_token_arrays(
-    records: DataFrame,
-    column: str,
-    id_col: str = "conv_id",
-    top_m: int = 48,
-    max_df_frac: float = 0.5,
-) -> DataFrame:
-    """(record_id, tfh array<bigint> sorted, tfw array<double> aligned):
-    L2-normalized tf-idf weights for the record's top_m tokens, token
-    identity as xxhash64.
-
-    This is the scale-path representation for the Text comparator: pair
-    cosine becomes a per-row sorted-merge dot product inside one Arrow
-    batch (distances.sparse_dot) instead of a pairs-x-tokens equi-join
-    (which shuffles |pairs| * avg_tokens rows — the measured bottleneck).
-    Tokens above max_df_frac document frequency are dropped before the cap:
-    they carry near-zero idf weight but dominate join/transfer volume.
-    """
-    from sparklink.preprocess import tokens
-
-    n_docs = records.count()
-    tok = records.select(F.col(id_col).alias("record_id"), F.explode(tokens(F.col(column))).alias("token"))
-    tf = tok.groupBy("record_id", "token").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    return tfidf_token_arrays_from_stats(tf, dfreq, n_docs, top_m=top_m, max_df_frac=max_df_frac)
-
-
-def tfidf_token_arrays_from_stats(
-    tf: DataFrame,
-    dfreq: DataFrame,
+def tfidf_token_arrays_from_vocab(
+    vocab: DataFrame,
     n_docs: int,
     top_m: int = 48,
     max_df_frac: float = 0.5,
     hash_expr=None,
 ) -> DataFrame:
-    """tfidf_token_arrays from a shared token-stats frame (see
-    blocking.token_stats) — no new explode over the corpus.
+    """(record_id, tfh array<int> sorted, tfw array<float> aligned):
+    L2-normalized tf-idf weights for the record's top_m tokens, token
+    identity as a 31-bit hash, built from the collected per-record vocab
+    frame (blocking.record_token_vocab) — no window, no extra shuffle.
+
+    This is the scale-path representation for the Text comparator: pair
+    cosine becomes a per-row sorted-merge dot product inside one Arrow
+    batch (sparse_dot) instead of a pairs-x-tokens equi-join (which
+    shuffles |pairs| * avg_tokens rows — the measured bottleneck). The
+    IDF is whatever corpus ``vocab``'s df and ``n_docs`` describe (the
+    gazetteer passes its index-time statistics).
+
+    Filter df <= max_df_frac*n_docs (such tokens carry near-zero idf
+    weight but dominate transfer volume), weight tf*log((n+1)/(df+1)),
+    keep the top_m by (w desc, token asc), hash, dedup, normalize. A
+    record whose every token is filtered out gets no row.
 
     Within-row hash dedup: two DISTINCT tokens of one record colliding on
     the 31-bit hash would break sparse_dot's assume_unique=True sorted
@@ -457,21 +420,33 @@ def tfidf_token_arrays_from_stats(
     array-side (sort + adjacent-filter over <=top_m elements) — no extra
     shuffle. ``hash_expr`` (token Column -> int Column) is injectable so
     tests can force collisions; default pmod(xxhash64, 2^31)."""
-    dfreq = dfreq.filter(F.col("df") <= int(max(1, max_df_frac * n_docs)))
-    w = tf.join(F.broadcast(dfreq), "token").withColumn(
-        "w", F.col("tf") * F.log((F.lit(float(n_docs)) + 1.0) / (F.col("df") + 1.0))
+    max_df = int(max(1, max_df_frac * n_docs))
+    eligible = F.filter("vocab", lambda s: s["df"] <= max_df)
+    wt = F.transform(
+        eligible,
+        lambda s: F.struct(
+            s["token"].alias("token"),
+            (s["tf"] * F.log((F.lit(float(n_docs)) + 1.0) / (s["df"] + 1.0))).alias("w"),
+        ),
     )
-    from pyspark.sql import Window
-
-    win = Window.partitionBy("record_id").orderBy(F.desc("w"), F.asc("token"))
-    top = w.withColumn("rn", F.row_number().over(win)).filter(F.col("rn") <= top_m)
-    # int32 hashes + float32 weights: halves the Arrow transfer per pair
+    ranked = F.array_sort(
+        wt,
+        lambda a, b: F.when(a["w"] > b["w"], -1)
+        .when(a["w"] < b["w"], 1)
+        .otherwise(F.when(a["token"] < b["token"], -1).when(a["token"] > b["token"], 1).otherwise(0)),
+    )
     if hash_expr is None:
         hash_expr = lambda c: F.pmod(F.xxhash64(c), F.lit(1 << 31)).cast("int")  # noqa: E731
-    agg = top.groupBy("record_id").agg(
-        F.collect_list(F.struct(hash_expr(F.col("token")).alias("h"), F.col("w").alias("w"))).alias("hw0")
+    agg = vocab.select(
+        "record_id",
+        F.transform(
+            F.slice(ranked, 1, top_m),
+            lambda s: F.struct(hash_expr(s["token"]).alias("h"), s["w"].alias("w")),
+        ).alias("hw0"),
     )
-    # sort (h asc, w desc), then keep only the first (max-weight) entry of
+    agg = agg.filter(F.size("hw0") > 0)
+    # int32 hashes + float32 weights: halves the Arrow transfer per pair.
+    # Sort (h asc, w desc), then keep only the first (max-weight) entry of
     # each hash run. hws must be a MATERIALIZED column: referencing the
     # array_sort inside the filter lambda would re-sort once per element.
     agg = agg.withColumn(
@@ -506,78 +481,6 @@ def tfidf_token_arrays_from_stats(
     )
 
 
-def tfidf_token_arrays_from_vocab(
-    vocab: DataFrame,
-    n_docs: int,
-    top_m: int = 48,
-    max_df_frac: float = 0.5,
-    hash_expr=None,
-) -> DataFrame:
-    """tfidf_token_arrays from the collected per-record vocab frame
-    (blocking.record_token_vocab) — no window, no extra shuffle.
-
-    Selection and arithmetic are identical to
-    ``tfidf_token_arrays_from_stats``: filter df <= max_df_frac*n_docs,
-    weight tf*log((n+1)/(df+1)), keep the top_m by (w desc, token asc) —
-    here an array_sort + slice instead of a row_number window — then the
-    same hash/dedup/normalize tail. Output is bit-identical (regression-
-    tested vs the stats path)."""
-    max_df = int(max(1, max_df_frac * n_docs))
-    eligible = F.filter("vocab", lambda s: s["df"] <= max_df)
-    wt = F.transform(
-        eligible,
-        lambda s: F.struct(
-            s["token"].alias("token"),
-            (s["tf"] * F.log((F.lit(float(n_docs)) + 1.0) / (s["df"] + 1.0))).alias("w"),
-        ),
-    )
-    ranked = F.array_sort(
-        wt,
-        lambda a, b: F.when(a["w"] > b["w"], -1)
-        .when(a["w"] < b["w"], 1)
-        .otherwise(F.when(a["token"] < b["token"], -1).when(a["token"] > b["token"], 1).otherwise(0)),
-    )
-    if hash_expr is None:
-        hash_expr = lambda c: F.pmod(F.xxhash64(c), F.lit(1 << 31)).cast("int")  # noqa: E731
-    agg = vocab.select(
-        "record_id",
-        F.transform(
-            F.slice(ranked, 1, top_m),
-            lambda s: F.struct(hash_expr(s["token"]).alias("h"), s["w"].alias("w")),
-        ).alias("hw0"),
-    )
-    # relation parity with the stats path: a record whose every token is
-    # stop-worded out has NO row there (the df-filtered join drops it) —
-    # drop its empty-array row here too
-    agg = agg.filter(F.size("hw0") > 0)
-    # identical tail to tfidf_token_arrays_from_stats: (h asc, w desc)
-    # sort, keep max-weight entry per hash run, L2-normalize
-    agg = agg.withColumn(
-        "hws",
-        F.array_sort(
-            "hw0",
-            lambda a, b: F.when(a["h"] < b["h"], -1)
-            .when(a["h"] > b["h"], 1)
-            .otherwise(F.when(a["w"] > b["w"], -1).when(a["w"] < b["w"], 1).otherwise(0)),
-        ),
-    ).drop("hw0")
-    agg = agg.withColumn(
-        "hw",
-        F.filter(
-            "hws",
-            lambda x, i: (i == 0) | (x["h"] != F.element_at(F.col("hws"), F.greatest(i, F.lit(1)))["h"]),
-        ),
-    )
-    norm = F.sqrt(F.aggregate("hw", F.lit(0.0), lambda acc, s: acc + s["w"] * s["w"]))
-    agg = agg.withColumn("norm", norm)
-    safe_w = lambda s: F.when(F.col("norm") > 0, s["w"] / F.col("norm")).otherwise(F.lit(0.0))  # noqa: E731
-    return agg.select(
-        "record_id",
-        F.transform("hw", lambda s: s["h"]).alias("tfh"),
-        F.transform("hw", lambda s: safe_w(s).cast("float")).alias("tfw"),
-    )
-
-
 def sparse_dot(ha: pd.Series, wa: pd.Series, hb: pd.Series, wb: pd.Series) -> np.ndarray:
     """Batch sparse dot of aligned (sorted-hash, weight) array pairs.
 
@@ -587,7 +490,7 @@ def sparse_dot(ha: pd.Series, wa: pd.Series, hb: pd.Series, wb: pd.Series) -> np
     row*2^32 + hash stays unique and sorted), then a single intersect1d
     merge + scatter-add produces all dots — no per-row Python loop in the
     scoring hot path. assume_unique=True is safe because the array builder
-    (tfidf_token_arrays_from_stats) collapses within-row hash duplicates
+    (tfidf_token_arrays_from_vocab) collapses within-row hash duplicates
     at build time; cross-record collisions (two different tokens scoring
     as a match) remain the documented 32-bit-noise tradeoff.
     """
@@ -613,22 +516,3 @@ def sparse_dot(ha: pd.Series, wa: pd.Series, hb: pd.Series, wb: pd.Series) -> np
     if len(common):
         np.add.at(out, common >> 32, WA[ia] * WB[ib])
     return out
-
-
-def cosine_for_pairs(pairs: DataFrame, vectors: DataFrame, out_col: str = "cos") -> DataFrame:
-    """pairs(id_a, id_b, ...) -> + cosine of the tf-idf vectors.
-
-    Shuffle shape: two hash joins on record_id + token-key join + one agg;
-    scales linearly in total shared tokens, never materializes dense
-    vectors.
-    """
-    va = vectors.select(F.col("record_id").alias("id_a"), "token", F.col("w").alias("wa"))
-    vb = vectors.select(F.col("record_id").alias("id_b"), "token", F.col("w").alias("wb"))
-    dots = (
-        pairs.select("id_a", "id_b")
-        .join(va, "id_a")
-        .join(vb, ["id_b", "token"])
-        .groupBy("id_a", "id_b")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias(out_col))
-    )
-    return pairs.join(dots, ["id_a", "id_b"], "left").fillna({out_col: 0.0})

@@ -157,7 +157,7 @@ class SparkGazetteer:
             return tf_cache[col]
 
         def dfreq_for(col: str) -> DataFrame:
-            return tf_for(col).groupBy("token").agg(F.count("*").alias("df"))
+            return B.doc_freq(tf_for(col))
 
         def slim_thunk() -> DataFrame:
             # reuses the already-staged/persisted dfreq (self._dfreq)
@@ -247,9 +247,27 @@ class SparkGazetteer:
             self._canonical.unpersist()
             self._own_canonical = False
 
-    def _scored(self, messy_records: DataFrame) -> DataFrame:
+    def _delta_payload(self, messy_records: DataFrame) -> DataFrame:
+        """The messy delta's hydration payload: 64-char prefixes + tf-idf
+        arrays from a fresh tf over the delta, weighted by the STAGED
+        canonical df / corpus size through the same vocab path the index
+        built its side with — no canonical-side job."""
         from sparklink import distances as D
 
+        vecs_by_col = {
+            col: D.tfidf_token_arrays_from_vocab(
+                B.record_token_vocab(B.token_stats(messy_records, col)[1], self._dfreq[col]), self._n_docs
+            )
+            for col in self._text_cols()
+        }
+        slim_m, fields_m = self._dd().slim_hydration_frame(messy_records, vecs_by_col)
+        assert self._hyd_fields is not None and fields_m == self._hyd_fields, (
+            f"staged index hydration fields {self._hyd_fields} do not match this "
+            f"model's layout {fields_m} — re-index with the current model"
+        )
+        return slim_m
+
+    def _scored(self, messy_records: DataFrame) -> DataFrame:
         assert self._index is not None, "call index(canonical) first"
         bm_messy = B.cap_block_sizes(B.build_blocking_map(messy_records, self.predicates), self.max_block_size)
         if self.broadcast_messy:
@@ -264,20 +282,7 @@ class SparkGazetteer:
             .dropDuplicates(["id_a", "id_b"])
         )
         dd = self._dd()
-        # messy-side payload only: fresh tf over the delta, weighted by the
-        # STAGED canonical df / corpus size — no canonical-side job
-        vecs_by_col = {
-            col: D.tfidf_token_arrays_from_stats(
-                B.token_stats(messy_records, col)[1], self._dfreq[col], self._n_docs
-            )
-            for col in self._text_cols()
-        }
-        slim_m, fields_m = dd.slim_hydration_frame(messy_records, vecs_by_col)
-        assert self._hyd_fields is not None and fields_m == self._hyd_fields, (
-            f"staged index hydration fields {self._hyd_fields} do not match this "
-            f"model's layout {fields_m} — re-index with the current model"
-        )
-        hyd = P.hydrate_two(cand, slim_m, self._slim, self._hyd_fields)
+        hyd = P.hydrate_two(cand, self._delta_payload(messy_records), self._slim, self._hyd_fields)
         withd = dd._features_from_hydrated(hyd)
         return dd.model.score(withd).select("id_a", "id_b", "score")
 

@@ -14,7 +14,6 @@ n_turns relative diff, conv_text TF-IDF cosine).
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -138,8 +137,7 @@ class SparkDedupe:
             return cached[2], cached[3], cached[4]
         toks, tf = B.partitioned_token_stats(records, column)
         self._held_frames = getattr(self, "_held_frames", []) + [tf]
-        dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-        vocab = B.record_token_vocab(tf, dfreq).persist()
+        vocab = B.record_token_vocab(tf, B.doc_freq(tf)).persist()
         n_docs = records.count()
         self._tf_cache = (records, column, toks, vocab, n_docs)
         return toks, vocab, n_docs
@@ -268,27 +266,23 @@ class SparkDedupe:
         bench.py's N-vs-4N executor proxy measures).
         """
         slim, fields = self._slim_base(records)
-        # r6: the old repartition(n, id_a, id_b) here was a WASTED exchange
-        # — the very next operator joins on id_a alone, which cannot reuse
-        # an (id_a, id_b) hash partitioning and immediately re-shuffles
-        # (guide §2.4: check for Exchange nodes you did not expect). The
-        # scorer-stage parallelism it was buying is preserved by AQE's
-        # parallelismFirst coalescing (post-join partitions target
-        # defaultParallelism, not advisory bytes); SPARK_GRAFT_PAIR_PARTITIONS
-        # still forces an explicit spread when set.
-        n_pair_parts = os.environ.get("SPARK_GRAFT_PAIR_PARTITIONS")
-        if n_pair_parts:
-            pairs = pairs.repartition(int(n_pair_parts), "id_a", "id_b")
-        text_vars = [v for v in self.model.variables if v.kind == "text"]
+        # no repartition of pairs here: the next join keys on id_a alone and
+        # would re-shuffle; AQE's parallelismFirst coalescing keeps the
+        # scorer stage at defaultParallelism
+        text_vars =[v for v in self.model.variables if v.kind == "text"]
         vec_fields = []
         for v in text_vars:
             cached = getattr(self, "_tf_cache", None)
             if cached is not None and cached[0] is records and cached[1] == v.column:
                 # reuse the blocking build's shared per-record vocab (one
                 # collect exchange serves canopy AND these arrays)
-                vecs = D.tfidf_token_arrays_from_vocab(cached[3], cached[4])
+                vocab, n_docs = cached[3], cached[4]
             else:
-                vecs = D.tfidf_token_arrays(records, v.column)
+                # no blocking build on this frame (fit, label_session,
+                # record-link): a lazy one-off vocab, nothing left cached
+                _, tf, dfreq = B.token_stats(records, v.column)
+                vocab, n_docs = B.record_token_vocab(tf, dfreq), records.count()
+            vecs = D.tfidf_token_arrays_from_vocab(vocab, n_docs)
             slim = slim.join(
                 vecs.withColumnRenamed("record_id", "conv_id")
                 .withColumnRenamed("tfh", f"tfh_{v.column}")

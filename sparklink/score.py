@@ -401,9 +401,9 @@ class FieldModel:
 
         Column-expression comparators stay in whole-stage codegen; string
         comparators go through one vectorized pandas UDF each; 'text'
-        variables are attached by the caller via
-        ``distances.cosine_for_pairs`` (DataFrame sub-plan) before this and
-        referenced here by their dist_col.
+        variables are attached by the caller (``sparse_dot_udf`` over the
+        hydrated tf-idf arrays, SparkDedupe._features_from_hydrated) after
+        this and referenced by their dist_col.
         """
         out = hydrated
         for v in self.variables:
@@ -509,8 +509,8 @@ class FieldModel:
                     + 0.10 * F.col(f"{v.dist_col}__unit")
                 )
             elif v.kind == "text":
-                # attached separately as a DataFrame sub-plan
-                # (distances.cosine_for_pairs); nothing to do per-row here
+                # attached separately by the caller (sparse_dot_udf over
+                # the hydrated tf-idf arrays); nothing to do here
                 continue
             elif v.kind in _COMPARATORS:
                 raw = _COMPARATORS[v.kind](l, r)

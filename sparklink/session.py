@@ -83,7 +83,7 @@ def get_spark(
     for _v in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
         defaults[f"spark.executorEnv.{_v}"] = os.environ[_v]
     if not under_submit:
-        defaults["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+        defaults["spark.driver.memory"] = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory()
     builder = SparkSession.builder.appName(app_name)
     if master:
         builder = builder.master(master)
@@ -97,6 +97,15 @@ def get_spark(
     spark.sparkContext.setLogLevel("WARN")
     _warm_python_workers(spark)
     return spark
+
+
+def _default_driver_memory() -> str:
+    """Local-mode driver heap when SPARK_GRAFT_DRIVER_MEM is unset:
+    min(48g, half of physical memory). In local mode the driver JVM holds
+    every executor's data; the other half is left to the Python workers
+    and the OS, so a small host is not driven into the OOM killer."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2 >> 20
+    return f"{min(48 << 10, half_mb)}m"
 
 
 def _warm_python_workers(spark: SparkSession) -> None:

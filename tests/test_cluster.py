@@ -1,6 +1,7 @@
 """Connected components vs a union-find oracle on random graphs (SURVEY §5)."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from sparklink.cluster import connected_components, entity_map
@@ -46,6 +47,11 @@ def test_cc_long_path(spark):
     # path graph exercises multi-iteration propagation + pointer jumping
     edges = [(f"n{i:03d}", f"n{i + 1:03d}") for i in range(40)]
     _check(spark, edges)
+    # one round cannot settle a 41-node path: raise, never return
+    # unconverged labels
+    df = spark.createDataFrame(edges, "id_a string, id_b string")
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(df, max_iter=1)
 
 
 def test_cc_random_graphs(spark):

@@ -5,6 +5,11 @@ index-time IDF, via its new no-canonical-scan contract)."""
 
 from __future__ import annotations
 
+import math
+import re
+from collections import Counter
+
+import numpy as np
 from pyspark.sql import functions as F
 
 
@@ -29,39 +34,90 @@ def _stats(spark):
     return recs, tf, dfreq
 
 
-def test_tfidf_vocab_path_matches_stats_path(spark):
-    """tfidf_token_arrays_from_vocab (array_sort ranking, no window) must
-    be bit-identical to tfidf_token_arrays_from_stats (row_number window)
-    — the r6 exchange-removal rests on this equivalence."""
+def _py_tokens(text):
+    return [t for t in re.split(r"[^0-9a-z]+", text.lower()) if t]
+
+
+def _py_tf(rows):
+    return {rid: Counter(_py_tokens(text)) for rid, text in rows}
+
+
+def _py_df(rows):
+    return Counter(t for _, text in rows for t in set(_py_tokens(text)))
+
+
+def _spark_hashes(spark, toks):
+    """token -> the default 31-bit token hash (pmod(xxhash64, 2^31))."""
+    df = spark.createDataFrame([(t,) for t in sorted(toks)], "token string")
+    h = F.pmod(F.xxhash64("token"), F.lit(1 << 31)).cast("int")
+    return {r["token"]: r["h"] for r in df.select("token", h.alias("h")).collect()}
+
+
+def _py_weights(tfs, df, n, lo, hi):
+    """[(w, token)] by (w desc, token asc), tf * log((n+1)/(df+1)) over
+    the tokens with lo <= df <= hi; tokens absent from df are dropped."""
+    ws = [(tf * math.log((n + 1.0) / (df[t] + 1.0)), t) for t, tf in tfs.items() if t in df and lo <= df[t] <= hi]
+    return sorted(ws, key=lambda x: (-x[0], x[1]))
+
+
+def _py_tfidf_arrays(tf_by_rec, df, n, hashes, top_m=48, max_df_frac=0.5):
+    """Pure-Python reference of tfidf_token_arrays_from_vocab: top_m by
+    (w desc, token asc), hash, keep the max-weight entry per hash (sorted
+    h asc), L2-normalize, float32. {record_id: (tfh, tfw)}."""
+    out = {}
+    for rid, tfs in tf_by_rec.items():
+        top = _py_weights(tfs, df, n, 0, int(max(1, max_df_frac * n)))[:top_m]
+        if not top:
+            continue
+        hw = sorted(((hashes[t], w) for w, t in top), key=lambda x: (x[0], -x[1]))
+        hw = [x for i, x in enumerate(hw) if i == 0 or x[0] != hw[i - 1][0]]
+        norm = math.sqrt(sum(w * w for _, w in hw))
+        out[rid] = ([h for h, _ in hw], [np.float32(w / norm if norm > 0 else 0.0) for _, w in hw])
+    return out
+
+
+def _assert_arrays_equal(got, want):
+    assert sorted(got) == sorted(want)
+    for rid, (tfh, tfw) in want.items():
+        assert list(got[rid][0]) == tfh, rid
+        assert np.array_equal(np.asarray(got[rid][1], dtype=np.float32), np.asarray(tfw, dtype=np.float32)), rid
+
+
+def test_tfidf_vocab_path_matches_python_reference(spark):
+    """The vocab path's tf-idf arrays equal the pure-Python reference
+    bit for bit (float32 weights)."""
     from sparklink.blocking import record_token_vocab
-    from sparklink.distances import tfidf_token_arrays_from_stats, tfidf_token_arrays_from_vocab
+    from sparklink.distances import tfidf_token_arrays_from_vocab
 
     recs, tf, dfreq = _stats(spark)
     n = recs.count()
-    old = tfidf_token_arrays_from_stats(tf, dfreq, n).toPandas().set_index("record_id").sort_index()
-    vocab = record_token_vocab(tf, dfreq)
-    new = tfidf_token_arrays_from_vocab(vocab, n).toPandas().set_index("record_id").sort_index()
-    assert list(old.index) == list(new.index)
-    for rid in old.index:
-        assert list(old.loc[rid, "tfh"]) == list(new.loc[rid, "tfh"]), rid
-        assert list(old.loc[rid, "tfw"]) == list(new.loc[rid, "tfw"]), rid
+    got = {
+        r["record_id"]: (r["tfh"], r["tfw"])
+        for r in tfidf_token_arrays_from_vocab(record_token_vocab(tf, dfreq), n).collect()
+    }
+    tf_py, df_py = _py_tf(VOCAB_ROWS), _py_df(VOCAB_ROWS)
+    want = _py_tfidf_arrays(tf_py, df_py, n, _spark_hashes(spark, df_py))
+    _assert_arrays_equal(got, want)
 
 
-def test_canopy_vocab_path_matches_stats_path(spark):
-    from sparklink.blocking import record_token_vocab, tfidf_canopy_keys_from_stats, tfidf_canopy_keys_from_vocab
+def test_canopy_vocab_path_matches_python_reference(spark):
+    """The vocab path's canopy keys equal the pure-Python top-m
+    selection (min_df <= df <= 0.2*n, (w desc, token asc))."""
+    from sparklink.blocking import record_token_vocab, tfidf_canopy_keys_from_vocab
 
     recs, tf, dfreq = _stats(spark)
     n = recs.count()
-    old = {
+    got = {
         (r["block_key"], r["record_id"])
-        for r in tfidf_canopy_keys_from_stats(tf, dfreq, n, "conv_text", top_m=2).collect()
+        for r in tfidf_canopy_keys_from_vocab(record_token_vocab(tf, dfreq), n, "conv_text", top_m=2).collect()
     }
-    vocab = record_token_vocab(tf, dfreq)
-    new = {
-        (r["block_key"], r["record_id"])
-        for r in tfidf_canopy_keys_from_vocab(vocab, n, "conv_text", top_m=2).collect()
+    df_py = _py_df(VOCAB_ROWS)
+    want = {
+        (f"canopy(conv_text):{t}", rid)
+        for rid, tfs in _py_tf(VOCAB_ROWS).items()
+        for _, t in _py_weights(tfs, df_py, n, 1, int(max(1, 0.2 * n)))[:2]
     }
-    assert old == new and len(old) > 0
+    assert got == want and len(got) > 0
 
 
 def test_connected_components_duplicate_edges_identical(spark):
@@ -156,6 +212,57 @@ def test_gazetteer_search_without_canonical_corpus(spark, tmp_path):
     gaz2._canonical = None
     after = {(r["messy_id"], r["canonical_id"], r["rank"]) for r in gaz2.search(messy, n_matches=2).collect()}
     assert after == before and len(after) > 0
+
+
+def test_gazetteer_idf_is_an_index_time_constant(spark):
+    """The messy delta is weighted by the INDEX's df and corpus size: a
+    messy token absent from the index vocabulary carries no weight, and
+    the delta's (tfh, tfw) equal the Python reference over the index df
+    (df <= 0.5*n filter, top 48 by (w desc, token asc), hash dedup,
+    L2-normalized float32)."""
+    from sparklink import blocking as B
+    from sparklink.linkage import SparkGazetteer
+    from sparklink.score import FieldModel, Variable
+
+    wide = " ".join(f"w{i:02d}" for i in range(60))
+    canonical = [
+        ("c1", "alpha beta gamma"),
+        ("c2", "alpha beta delta"),
+        ("c3", "alpha gamma epsilon"),
+        ("c4", "alpha zeta eta"),
+        ("c5", "theta iota kappa"),
+        ("c6", "lambda mu beta"),
+        ("c7", wide),
+    ]
+    messy = [
+        # novelword: absent from the index; alpha: df 4 > 0.5 * 7
+        ("m1", "alpha beta novelword novelword gamma"),
+        ("m2", "Theta kappa kappa delta"),
+        # 60 index tokens, w00 twice: the top-48 cut by (w desc, token asc)
+        ("m3", "w00 " + wide),
+        ("m4", "novelword"),
+    ]
+    gaz = SparkGazetteer(
+        model=FieldModel(variables=[Variable("conv_text", "text", has_missing=False)]),
+        predicates=[B.Predicate("first_tok(conv_text)", "conv_text", B.first_token)],
+    )
+    gaz.index(_records(spark, canonical))
+    try:
+        got = {
+            r["conv_id"]: (r["tfh_conv_text"], r["tfw_conv_text"])
+            for r in gaz._delta_payload(_records(spark, messy)).collect()
+        }
+    finally:
+        gaz.unindex()
+
+    df_index = _py_df(canonical)
+    hashes = _spark_hashes(spark, set(df_index) | {"novelword"})
+    assert "novelword" not in df_index
+    assert hashes["novelword"] not in got["m1"][0]
+    assert got["m4"] == (None, None)  # no index token at all: no arrays
+    want = _py_tfidf_arrays(_py_tf(messy), df_index, len(canonical), hashes)
+    assert len(want["m3"][0]) == 48
+    _assert_arrays_equal({k: v for k, v in got.items() if k != "m4"}, want)
 
 
 def test_match_new_second_batch_reuses_staged_gazetteer(spark, tmp_path):

@@ -34,11 +34,23 @@ def _run(cmd: list[str], cwd: str, env: dict, timeout: int = 900) -> dict:
     return json.loads(r.stdout.strip().splitlines()[-1])
 
 
-def test_spark_submit_pyfiles_end_to_end(tmp_path):
+def _build_pyfiles() -> bytes:
     build = subprocess.run(
         ["bash", os.path.join(REPO, "tools", "build_pyfiles.sh")], capture_output=True, text=True
     )
     assert build.returncode == 0, build.stderr
+    with open(os.path.join(REPO, "dist", "sparklink.zip"), "rb") as f:
+        return f.read()
+
+
+def test_build_pyfiles_is_deterministic():
+    """Two consecutive builds are byte-identical, so running the tests
+    never rewrites the committed artifact."""
+    assert _build_pyfiles() == _build_pyfiles()
+
+
+def test_spark_submit_pyfiles_end_to_end(tmp_path):
+    _build_pyfiles()
     zip_path = os.path.join(REPO, "dist", "sparklink.zip")
 
     # the driver script lives OUTSIDE the repo and runs with cwd=tmp_path,
